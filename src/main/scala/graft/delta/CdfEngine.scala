@@ -41,42 +41,17 @@ private[graft] object CdfEngine {
 
   /** Stored change-data rows: logical table columns + the RAW
     * `_change_type` (`insert`/`delete`/`update_preimage`/
-    * `update_postimage`). Same read shape as the add-file scan: explicit
-    * physical schema (schema evolution null-fills), one multi-path scan
-    * branch per partition tuple, typed partition literals injected from
-    * the cdc action's `partitionValues`.
+    * `update_postimage`). The cdc files are read like data files, as
+    * add-shaped entries (path, partitionValues, size) through the one
+    * scan constructor ([[DeltaScan.scanWithRowIndex]]): explicit
+    * physical schema (schema evolution null-fills), partition values
+    * typed by the index, `_change_type` an extra physical column.
     */
-  def readStored(snap: DeltaSnapshot, cdcs: Seq[CdcAction]): DataFrame = {
-    val spark = snap.spark
-    val schema = snap.schema
-    val partCols = snap.partitionColumns.toSet
-    val logToPhys = DeltaSchema.logicalToPhysical(schema)
-    val dataFields = schema.fields.toSeq.filterNot(f => partCols.contains(f.name))
-    val physReadSchema = StructType(
-      DeltaSchema.physicalize(StructType(dataFields)).fields :+
-        StructField(ChangeTypeCol, StringType))
-    val base = snap.deltaPath.stripSuffix("/")
-    val partFields = schema.fields.toSeq.filter(f => partCols.contains(f.name))
-    def pvOf(c: CdcAction): Seq[Option[String]] = partFields.map { f =>
-      val phys = logToPhys.getOrElse(f.name, f.name)
-      c.partitionValues.get(phys).orElse(c.partitionValues.get(f.name)).flatten
-    }
-    val branches = cdcs.groupBy(pvOf).toSeq.map { case (pv, cs) =>
-      val scan = spark.read.schema(physReadSchema)
-        .parquet(cs.map(c => DeltaScan.resolvePath(base, c.path)): _*)
-      val proj = schema.fields.toSeq.map { f =>
-        if (partCols.contains(f.name))
-          PartitionValues.toLiteral(pv(partFields.indexWhere(_.name == f.name)), f)
-        else {
-          val phys = DeltaSchema.physicalName(f)
-          col(s"`${phys.replace("`", "``")}`")
-            .cast(DeltaScan.relax(f.dataType)).as(f.name)
-        }
-      }
-      scan.select(proj :+ col(ChangeTypeCol): _*)
-    }
-    branches.reduce(_.unionByName(_))
-  }
+  def readStored(snap: DeltaSnapshot, cdcs: Seq[CdcAction]): DataFrame =
+    DeltaScan.scanWithRowIndex(snap,
+      cdcs.map(c => AddAction(c.path, c.partitionValues, c.size, 0L, None)),
+      Seq(StructField(ChangeTypeCol, StringType)))
+      .drop("__graft_file", "__graft_row_index")
 
   /** Collapse the four stored change types onto the engine's net-change
     * contract: `update_preimage` IS the retraction of the old row and

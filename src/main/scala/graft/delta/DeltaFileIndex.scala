@@ -28,9 +28,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * modificationTime live in the log) — zero filesystem listing, the
   * whole point of a table format at scale.
   *
-  * Deletion-vector tables use this index too: the file source serves
-  * `_metadata.row_index`, so DeltaScan layers the row-index/file-key
-  * columns over the single scan node and anti-joins the deleted pairs.
+  * It is the index of every Delta data-file read ([[DeltaScan.fileScan]]):
+  * snapshot scans, the DML predicate passes, stable-row-id scans, DV
+  * change rows, stored change data (cdc files passed as add-shaped
+  * entries) and compaction. The file source serves
+  * `_metadata.file_path` / `_metadata.row_index`, so DeltaScan layers
+  * the file-key/row-index columns over the single scan node — for the
+  * DV anti-join and the DML bitmaps.
   */
 final class DeltaFileIndex(
     snap: DeltaSnapshot,

@@ -1,11 +1,16 @@
 package graft.delta
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Scan options — the union of the reference's `PolarsSettings` +
   * scan keyword args (polars.py:42-69,361-378; duckdb.py:374-394).
+  * They choose rows, columns and types, never the plan shape: every
+  * scan is the one [[DeltaFileIndex]] scan.
   */
 final case class ScanSettings(
     conditions: Seq[Cond] = Nil,
@@ -26,16 +31,7 @@ final case class ScanSettings(
       * cast over the logical schema.
       */
     timestampType: Option[DataType] = None,
-    timestampNtzType: Option[DataType] = None,
-    /** Scan-shape dispatch. Any value > 0 (the default) takes the
-      * Catalyst-native DeltaFileIndex path — ONE FileSourceScanExec with
-      * planner-side partition pruning, O(1) plan regardless of partition
-      * count, deletion vectors subtracted via `_metadata.row_index` over
-      * the same single scan. 0 forces the legacy shape (escape hatch /
-      * its specs): one multi-path scan joined (broadcast) with a
-      * file→partition-values map.
-      */
-    wideUnionThreshold: Int = 64)
+    timestampNtzType: Option[DataType] = None)
 
 /** Compile a Delta snapshot into a Spark `DataFrame` — the engine's core.
   *
@@ -43,24 +39,33 @@ final case class ScanSettings(
   * duckdb.py:450-522 / polars.py:444-550) collapses in Spark to three
   * moves:
   *
-  *  1. read the parquet with an explicit *physical* schema
-  *     (`spark.read.schema(phys)`): Spark matches nested fields by name
-  *     against the footer and null-fills anything missing — schema
-  *     evolution (P4) for free, no per-file footer probe needed;
+  *  1. read the parquet with an explicit *physical* schema: Spark
+  *     matches nested fields by name against the footer and null-fills
+  *     anything missing — schema evolution (P4) for free, no per-file
+  *     footer probe needed;
   *  2. one `Cast` per top-level column back to the *logical* type:
   *     struct/array/map casts rename nested fields positionally, preserve
   *     NULL structs (no struct-of-NULLs regression) and absorb type
   *     widening — P1/P3/P5 in a single codegen'd expression;
-  *  3. typed literals for partition columns (P2), constant per file group.
+  *  3. partition values typed by the [[DeltaFileIndex]], constant per
+  *     file group (P2).
   *
-  * The default plan shape is a single `FileSourceScanExec` through
-  * [[DeltaFileIndex]] regardless of file or partition count (SURVEY §7
-  * risk register: union width) — partition values typed by the index,
-  * deletion vectors subtracted by row index over the same scan node.
-  * Pruning (partition values + stats zone maps + limit) happens
-  * driver-side AND planner-side (the index re-prunes cached frames).
+  * Every read of Delta data files — snapshot scans, the DML passes,
+  * stored change data and compaction — is built by [[fileScan]]: a
+  * single `FileSourceScanExec` through [[DeltaFileIndex]] regardless of
+  * file or partition count (SURVEY §7 risk register: union width), with
+  * `_metadata.file_path` / `_metadata.row_index` keying rows for
+  * deletion vectors ([[subtractDeleted]]) and row tracking
+  * ([[withStableIds]]). Pruning (partition values + stats zone maps +
+  * limit) happens driver-side AND planner-side (the index re-prunes
+  * cached frames).
   */
 object DeltaScan {
+
+  /** Deleted-row total up to which the DV anti-join broadcasts its
+    * (file, row index) side; larger sets shuffle.
+    */
+  private val DvBroadcastMaxRows = 5000000L
 
   def scan(spark: SparkSession, path: String,
       settings: ScanSettings = ScanSettings()): DataFrame = {
@@ -95,143 +100,19 @@ object DeltaScan {
       schema.fields.toSeq.filter(f =>
         condCols.contains(f.name) && !projected.exists(_.name == f.name))
 
-    val dataFields = readFields.filterNot(f => partCols.contains(f.name))
-    val physReadSchema = DeltaSchema.physicalize(StructType(dataFields))
-
     val actions = snap.addActionsFiltered(
       settings.conditions, settings.limit, settings.actionFilter)
 
-    val base = snap.deltaPath.stripSuffix("/")
-
-    val logToPhys = DeltaSchema.logicalToPhysical(schema)
-    def dataProjection(f: StructField): Column = {
-      val phys = DeltaSchema.physicalName(f)
-      // cast target is nullability-relaxed: the file relation reports
-      // everything nullable, and Cast refuses nullable→non-nullable
-      col(s"`${phys.replace("`", "``")}`").cast(relax(f.dataType)).as(f.name)
-    }
-
-    // resolved partition tuple per file (keyed by physical name),
-    // tolerant of legacy `partition.<name>` key shapes — and the
-    // grouping key, so files whose values live under different key
-    // shapes but agree in value still share one scan branch
-    val partFields: Seq[StructField] =
-      schema.fields.toSeq.filter(f => partCols.contains(f.name))
-    def resolvedPv(a: AddAction): Map[String, Option[String]] =
-      partFields.map { f =>
-        val phys = logToPhys.getOrElse(f.name, f.name)
-        phys -> a.partitionValueFor(phys, f.name).flatten
-      }.toMap
-
-    // deletion vectors: the scan additionally carries the physical
-    // row index + normalized file key, and deleted (file, index) pairs —
-    // expanded from the compact bitmaps on EXECUTORS — are subtracted
-    // with one anti-join after the union
-    val dvActions = actions.filter(_.hasDeletionVector)
-    val fileKey = "__graft_file"
-    val riKey = "__graft_row_index"
-    // file key from `_metadata.file_path`, NOT input_file_name(): the
-    // metadata column is a deterministic attribute, while a
-    // nondeterministic expression anywhere in the projection would stop
-    // Catalyst pushing partition predicates through it — silently
-    // disabling planner-side pruning on every DV table
-    def dvCols(scanDf: DataFrame): Seq[Column] =
-      if (dvActions.isEmpty) Nil
-      else Seq(normalizeFileKey(scanDf.col("_metadata.file_path")).as(fileKey),
-        scanDf.col("_metadata.row_index").as(riKey))
-
-    val df =
-      if (actions.isEmpty) emptyTyped(spark, StructType(readFields))
-      else if (settings.wideUnionThreshold > 0) {
-        // Catalyst-native path (the default): a DeltaFileIndex hands the
-        // planner the file list, typed partition values, and log-derived
-        // size — ONE FileSourceScanExec whatever the partition count,
-        // partition pruning re-evaluated by Catalyst per query (cached
-        // DataFrames re-prune under new predicates), stats skipping on
-        // the pushed data filters inside the index. Deletion-vector
-        // tables ride the same path: `_metadata.row_index` is served by
-        // the file source, so the scan carries the row-index/file-key
-        // pair and the anti-join below subtracts deleted rows — still
-        // ONE scan node. The union/broadcast shapes below remain only
-        // as the wideUnionThreshold=0 escape hatch (and its specs).
-        val index = new DeltaFileIndex(snap, actions)
-        val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          index, partitionSchema = index.partitionSchema,
-          dataSchema = physReadSchema, bucketSpec = None,
-          fileFormat =
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-          options = Map.empty)(spark)
-        val scan = spark.baseRelationToDataFrame(relation)
-        scan.select(readFields.map { f =>
-          if (partCols.contains(f.name)) {
-            val phys = logToPhys.getOrElse(f.name, f.name)
-            // typed by the index already: alias-only, so partition
-            // predicates stay recognizable to PruneFileSourcePartitions
-            col(s"`${phys.replace("`", "``")}`").as(f.name)
-          } else dataProjection(f)
-        } ++ dvCols(scan): _*)
-      } else {
-        // legacy shape (wideUnionThreshold=0 escape hatch): ONE
-        // multi-path scan for every file, and partition values delivered
-        // by a broadcast join on the file name — constant-size plan
-        // regardless of partition count
-        val hconf = spark.sessionState.newHadoopConf()
-        val paths = actions.map(a => resolvePath(base, a.path))
-        val scan0 = spark.read.schema(physReadSchema).parquet(paths: _*)
-        val scan = (if (dvActions.isEmpty) scan0
-          else scan0.withColumn(riKey, scan0.col("_metadata.row_index")))
-          .withColumn(fileKey, normalizeFileKey(input_file_name()))
-
-        val partFields = readFields.filter(f => partCols.contains(f.name))
-        val pvSchema = StructType(
-          StructField(fileKey, org.apache.spark.sql.types.StringType,
-            nullable = false) +: partFields)
-        val rows = actions.map { a =>
-          // join key = decoded, scheme/authority-free path — the same
-          // normalization normalizeFileKey applies to input_file_name()
-          val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-          val uri = p.getFileSystem(hconf).makeQualified(p).toUri.getPath
-          val pv = resolvedPv(a)
-          Row.fromSeq(uri +: partFields.map { f =>
-            val phys = logToPhys.getOrElse(f.name, f.name)
-            pv.getOrElse(phys, None)
-              .map(v => toJavaSql(PartitionValues.deserialize(v, f.dataType), f))
-              .orNull
-          })
-        }
-        val pvDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), pvSchema)
-        val keep: Seq[Column] =
-          if (dvActions.isEmpty) Nil else Seq(col(fileKey), col(riKey))
-        scan.join(broadcast(pvDf), Seq(fileKey))
-          .select(readFields.map { f =>
-            if (partCols.contains(f.name)) col(s"`${f.name.replace("`", "``")}`")
-            else dataProjection(f)
-          } ++ keep: _*)
-      }
-
-    // subtract deleted rows: compact bitmap bytes ship to executors (one
-    // row per DV file), expansion to (file, row index) happens there,
-    // then one anti-join — broadcast while the total deleted-row count is
-    // broadcastable, shuffled beyond that
     val undeleted =
-      if (dvActions.isEmpty || actions.isEmpty) df
+      if (actions.isEmpty) emptyTyped(spark, StructType(readFields))
       else {
-        val hconf = spark.sessionState.newHadoopConf()
-        val dvRows: Seq[(String, Array[Byte])] = dvActions.map { a =>
-          val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-          val uri = p.getFileSystem(hconf).makeQualified(p).toUri.getPath
-          uri -> DeletionVectors.read(spark, base, a.deletionVector.get)
-        }
-        import spark.implicits._
-        val deleted = spark.createDataset(dvRows)
-          .flatMap { case (f, data) =>
-            DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-          .toDF(fileKey, riKey)
-        val totalDeleted = dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-        val build = if (totalDeleted <= 5000000L) broadcast(deleted) else deleted
-        df.join(build, Seq(fileKey, riKey), "left_anti")
-          .drop(fileKey, riKey)
+        val scan = fileScan(snap, actions,
+          readFields.filterNot(f => partCols.contains(f.name)))
+        val cols = readFields.map(logicalCol(partCols))
+        if (!actions.exists(_.hasDeletionVector)) scan.select(cols: _*)
+        else subtractDeleted(spark, snap.deltaPath.stripSuffix("/"), actions,
+            scan.select(cols ++ rowKey(scan): _*))
+          .drop("__graft_file", "__graft_row_index")
       }
 
     val filtered0 =
@@ -240,8 +121,7 @@ object DeltaScan {
       else undeleted
     val narrowed =
       if (readFields.lengthCompare(projected.size) == 0) filtered0
-      else filtered0.select(projected.map(f =>
-        col(s"`${f.name.replace("`", "``")}`")): _*)
+      else filtered0.select(projected.map(f => q(f.name)): _*)
 
     val retyped =
       if (settings.timestampType.isEmpty && settings.timestampNtzType.isEmpty) narrowed
@@ -251,8 +131,7 @@ object DeltaScan {
           case org.apache.spark.sql.types.TimestampNTZType => settings.timestampNtzType
           case _ => None
         }
-        val c = col(s"`${f.name.replace("`", "``")}`")
-        target.fold(c)(t => c.cast(t).as(f.name))
+        target.fold(q(f.name))(t => q(f.name).cast(t).as(f.name))
       }: _*)
 
     val distinct = if (settings.distinct) retyped.distinct() else retyped
@@ -261,12 +140,53 @@ object DeltaScan {
       else distinct.limit(n.toInt))
   }
 
+  /** The scan constructor: a `HadoopFsRelation` over a [[DeltaFileIndex]]
+    * of `files`. Its columns are PHYSICAL — `dataFields` under their
+    * physical names (absent in a file ⇒ null-filled), `extraPhysical`
+    * read as-is, then the index's typed partition columns — and the file
+    * source serves `_metadata.file_path` and `_metadata.row_index`.
+    */
+  private[delta] def fileScan(snap: DeltaSnapshot, files: Seq[AddAction],
+      dataFields: Seq[StructField],
+      extraPhysical: Seq[StructField] = Nil): DataFrame = {
+    val index = new DeltaFileIndex(snap, files)
+    val dataSchema = StructType(
+      DeltaSchema.physicalize(StructType(dataFields)).fields ++ extraPhysical)
+    snap.spark.baseRelationToDataFrame(HadoopFsRelation(
+      index, partitionSchema = index.partitionSchema, dataSchema = dataSchema,
+      bucketSpec = None, fileFormat = new ParquetFileFormat,
+      options = Map.empty)(snap.spark))
+  }
+
+  /** Logical column `f` over a [[fileScan]] frame. Partition columns are
+    * typed by the index already: alias-only, so partition predicates stay
+    * recognizable to PruneFileSourcePartitions. Data columns cast back to
+    * the logical type — nullability-relaxed: the file relation reports
+    * everything nullable, and Cast refuses nullable→non-nullable.
+    */
+  private def logicalCol(partCols: Set[String])(f: StructField): Column = {
+    val phys = q(DeltaSchema.physicalName(f))
+    if (partCols.contains(f.name)) phys.as(f.name)
+    else phys.cast(relax(f.dataType)).as(f.name)
+  }
+
+  /** The row key over a [[fileScan]] frame: `__graft_file` (normalized
+    * path) and `__graft_row_index` (physical row position). The file key
+    * comes from `_metadata.file_path`, a deterministic attribute: a
+    * nondeterministic file-name expression in the projection would stop
+    * Catalyst pushing predicates through it into the scan.
+    */
+  private[delta] def rowKey(scan: DataFrame): Seq[Column] = Seq(
+    normalizeFileKey(scan.col("_metadata.file_path")).as("__graft_file"),
+    scan.col("_metadata.row_index").as("__graft_row_index"))
+
   /** Logical scan of specific files that ALSO exposes `__graft_file`
-    * (normalized path) and `__graft_row_index` (physical row position) —
-    * DeltaWriter.delete's predicate pass. One multi-path scan branch per
-    * partition group, like the main union path; existing deletion
-    * vectors are NOT applied (delete must see all physical rows to merge
-    * bitmaps).
+    * and `__graft_row_index` ([[rowKey]]) — the read of the DML passes
+    * (delete, update, merge, replaceWhere), [[DvCdf.rowsAt]], the CDF
+    * inserts and stored change data. A projection over [[fileScan]], so
+    * a predicate applied to it prunes partitions and is pushed into the
+    * parquet scan. Existing deletion vectors are NOT applied (delete
+    * must see all physical rows to merge bitmaps).
     */
   private[graft] def scanWithRowIndex(
       snap: DeltaSnapshot, actions: Seq[AddAction],
@@ -274,43 +194,17 @@ object DeltaScan {
         * a file ⇒ null-filled) — the materialized row-tracking columns.
         */
       extraPhysical: Seq[StructField] = Nil): DataFrame = {
-    val spark = snap.spark
     val schema = snap.schema
     val partCols = snap.partitionColumns.toSet
-    val logToPhys = DeltaSchema.logicalToPhysical(schema)
-    val dataFields = schema.fields.toSeq.filterNot(f => partCols.contains(f.name))
-    val physReadSchema = StructType(
-      DeltaSchema.physicalize(StructType(dataFields)).fields ++ extraPhysical)
-    val base = snap.deltaPath.stripSuffix("/")
-    val partFields = schema.fields.toSeq.filter(f => partCols.contains(f.name))
-    def pvOf(a: AddAction): Seq[Option[String]] = partFields.map { f =>
-      val phys = logToPhys.getOrElse(f.name, f.name)
-      a.partitionValueFor(phys, f.name).flatten
-    }
-    val branches = actions.groupBy(pvOf).toSeq.map { case (pv, as) =>
-      val scan = spark.read.schema(physReadSchema)
-        .parquet(as.map(a => resolvePath(base, a.path)): _*)
-      val proj = schema.fields.toSeq.map { f =>
-        if (partCols.contains(f.name))
-          PartitionValues.toLiteral(pv(partFields.indexWhere(_.name == f.name)), f)
-        else {
-          val phys = DeltaSchema.physicalName(f)
-          col(s"`${phys.replace("`", "``")}`").cast(relax(f.dataType)).as(f.name)
-        }
-      }
-      scan.select(proj ++
-        extraPhysical.map(f => col(s"`${f.name.replace("`", "``")}`")) ++ Seq(
-        normalizeFileKey(input_file_name()).as("__graft_file"),
-        scan.col("_metadata.row_index").as("__graft_row_index")): _*)
-    }
-    branches.reduce(_.unionByName(_))
+    val scan = fileScan(snap, actions,
+      schema.fields.toSeq.filterNot(f => partCols.contains(f.name)), extraPhysical)
+    scan.select(schema.fields.toSeq.map(logicalCol(partCols)) ++
+      extraPhysical.map(f => q(f.name)) ++ rowKey(scan): _*)
   }
 
   /** Scan with STABLE ROW IDS (PROTOCOL.md#row-tracking): the logical
-    * table columns plus `_row_id` and `_row_commit_version`, each
-    * `coalesce(materialized column, baseRowId + physical row index)` /
-    * `coalesce(materialized, defaultRowCommitVersion)` — the protocol's
-    * resolution order, so ids survive OPTIMIZE rewrites (which
+    * table columns plus `_row_id` and `_row_commit_version`, resolved by
+    * [[withStableIds]], so ids survive OPTIMIZE rewrites (which
     * materialize them) and DV DML (which never moves surviving rows).
     * Deletion vectors are applied; files without row-tracking fields
     * yield null ids (tracking was suspended when they were written).
@@ -321,53 +215,82 @@ object DeltaScan {
     val schema = snap.schema
     val base = snap.deltaPath.stripSuffix("/")
     val actions = snap.liveFiles
-    val idT = org.apache.spark.sql.types.LongType
     if (actions.isEmpty)
       return emptyTyped(spark, StructType(schema.fields ++ Seq(
-        StructField("_row_id", idT), StructField("_row_commit_version", idT))))
+        StructField("_row_id", LongType),
+        StructField("_row_commit_version", LongType))))
     val matId = snap.configuration.get(DeltaWriter.MatRowIdKey)
     val matVer = snap.configuration.get(DeltaWriter.MatRowVersionKey)
-    val extra = (matId.toSeq ++ matVer.toSeq).map(StructField(_, idT))
-    def q(n: String) = col(s"`${n.replace("`", "``")}`")
-    val scan = scanWithRowIndex(snap, actions, extra)
-    import spark.implicits._
-    val info = actions.map(a => (fileUri(spark, base, a),
-      a.baseRowId, a.defaultRowCommitVersion))
-      .toDF("__graft_file", "__graft_base", "__graft_dver")
-    val joined = scan.join(broadcast(info), Seq("__graft_file"))
-    val dvActions = actions.filter(_.hasDeletionVector)
-    val undeleted =
-      if (dvActions.isEmpty) joined
-      else {
-        val dvRows = dvActions.map(a => fileUri(spark, base, a) ->
-          DeletionVectors.read(spark, base, a.deletionVector.get))
-        val deleted = spark.createDataset(dvRows)
-          .flatMap { case (f, data) =>
-            DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-          .toDF("__graft_file", "__graft_row_index")
-        val total = dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-        val build = if (total <= 5000000L) broadcast(deleted) else deleted
-        joined.join(build,
-          Seq("__graft_file", "__graft_row_index"), "left_anti")
-      }
-    import org.apache.spark.sql.functions.coalesce
-    val rowId = coalesce((matId.map(q).toSeq :+
-      (col("__graft_base") + col("__graft_row_index"))): _*).as("_row_id")
-    val rowVer = coalesce((matVer.map(q).toSeq :+
-      col("__graft_dver")): _*).as("_row_commit_version")
-    undeleted.select(
-      schema.fields.toSeq.map(f => q(f.name)) ++ Seq(rowId, rowVer): _*)
+    val extra = (matId.toSeq ++ matVer.toSeq).map(StructField(_, LongType))
+    val ided = withStableIds(spark, base, actions,
+      scanWithRowIndex(snap, actions, extra), matId, matVer,
+      "_row_id", "_row_commit_version")
+    subtractDeleted(spark, base, actions, ided).select(
+      (schema.fieldNames.toSeq ++ Seq("_row_id", "_row_commit_version")).map(q): _*)
   }
 
-  /** The normalized file key [[scanWithRowIndex]] and the DV anti-join
-    * use for a given action — drive-side twin of normalizeFileKey.
+  /** Stable row-id resolution (PROTOCOL.md#row-tracking) over a frame
+    * keyed by [[rowKey]]: `idOut` = `coalesce(materialized id, baseRowId
+    * + row index)` and `verOut` = `coalesce(materialized version,
+    * defaultRowCommitVersion)` — the protocol's resolution order — with
+    * each file's fields joined from a broadcast file→fields map. An
+    * existing column named like an output is replaced in place.
+    */
+  private[delta] def withStableIds(spark: SparkSession, base: String,
+      files: Seq[AddAction], df: DataFrame,
+      matId: Option[String], matVer: Option[String],
+      idOut: String, verOut: String): DataFrame = {
+    val key = fileUri(spark, base)
+    import spark.implicits._
+    val info = files.map(a => (key(a), a.baseRowId, a.defaultRowCommitVersion))
+      .toDF("__graft_file", "__graft_base", "__graft_dver")
+    df.join(broadcast(info), Seq("__graft_file"))
+      .withColumn(idOut, coalesce((matId.map(q).toSeq :+
+        (col("__graft_base") + col("__graft_row_index"))): _*))
+      .withColumn(verOut, coalesce((matVer.map(q).toSeq :+
+        col("__graft_dver")): _*))
+      .drop("__graft_base", "__graft_dver")
+  }
+
+  /** Deletion-vector subtraction: drop from `df` — keyed by [[rowKey]] —
+    * the rows the deletion vectors of `files` mask. Compact bitmap bytes
+    * ship to executors (one row per DV file), expansion to (file, row
+    * index) pairs happens there, then one anti-join — broadcast while the
+    * deleted-row total is at most [[DvBroadcastMaxRows]], shuffled beyond
+    * that. The key columns stay; callers drop them.
+    */
+  private[delta] def subtractDeleted(spark: SparkSession, base: String,
+      files: Seq[AddAction], df: DataFrame): DataFrame = {
+    val dvFiles = files.filter(_.hasDeletionVector)
+    if (dvFiles.isEmpty) return df
+    val key = fileUri(spark, base)
+    import spark.implicits._
+    val deleted = spark.createDataset(dvFiles.map(a =>
+        key(a) -> DeletionVectors.read(spark, base, a.deletionVector.get)))
+      .flatMap { case (f, data) =>
+        DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
+      .toDF("__graft_file", "__graft_row_index")
+    val total = dvFiles.flatMap(_.deletionVector).map(_.cardinality).sum
+    df.join(if (total <= DvBroadcastMaxRows) broadcast(deleted) else deleted,
+      Seq("__graft_file", "__graft_row_index"), "left_anti")
+  }
+
+  /** The driver-side file key: an action's path resolved, qualified and
+    * reduced to its decoded path component — what [[normalizeFileKey]]
+    * computes from `_metadata.file_path` on the executors. The table
+    * root's FileSystem is resolved once per call, not once per file;
+    * only the path component is kept, so its scheme and authority never
+    * matter.
     */
   private[graft] def fileUri(
-      spark: SparkSession, base: String, a: AddAction): String = {
-    val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .makeQualified(p).toUri.getPath
+      spark: SparkSession, base: String): AddAction => String = {
+    val fs = new Path(base).getFileSystem(spark.sessionState.newHadoopConf())
+    val (fsUri, workDir) = (fs.getUri, fs.getWorkingDirectory)
+    a => new Path(resolvePath(base, a.path))
+      .makeQualified(fsUri, workDir).toUri.getPath
   }
+
+  private def q(n: String): Column = col(s"`${n.replace("`", "``")}`")
 
   /** Zero live files ⇒ typed empty relation with the full logical schema
     * (duckdb.py:523-528, polars.py:551-558).
@@ -376,7 +299,7 @@ object DeltaScan {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Deep nullability relaxation (every field/element/value nullable). */
-  private[delta] def relax(dt: DataType): DataType = dt match {
+  private def relax(dt: DataType): DataType = dt match {
     case s: StructType => StructType(s.fields.map(f =>
       StructField(f.name, relax(f.dataType), nullable = true, f.metadata)))
     case org.apache.spark.sql.types.ArrayType(et, _) =>
@@ -386,7 +309,7 @@ object DeltaScan {
     case other => other
   }
 
-  /** input_file_name() yields a percent-encoded URI (`file:///…`);
+  /** `_metadata.file_path` is a percent-encoded URI (`file:///…`);
     * reduce it to the decoded path component to match the driver-built
     * keys (scheme and authority dropped on both sides). `url_decode` is
     * FORM decoding — a literal '+' in the path (legal in file names and
@@ -394,27 +317,13 @@ object DeltaScan {
     * row of that file at the broadcast join; protect it first, exactly
     * as [[decodePath]] does.
     */
-  private[delta] def normalizeFileKey(c: Column): Column =
+  private def normalizeFileKey(c: Column): Column =
     org.apache.spark.sql.functions.url_decode(
       org.apache.spark.sql.functions.regexp_replace(
         org.apache.spark.sql.functions.regexp_replace(
           c, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""),
         "\\+", "%2B"))
 
-  /** `createDataFrame` wants java.sql temporal types and scaled decimals. */
-  private def toJavaSql(v: Any, f: StructField): Any = v match {
-    case d: java.time.LocalDate => java.sql.Date.valueOf(d)
-    case i: java.time.Instant => java.sql.Timestamp.from(i)
-    case l: java.time.LocalDateTime =>
-      if (f.dataType == org.apache.spark.sql.types.TimestampNTZType) l
-      else java.sql.Timestamp.valueOf(l)
-    case b: java.math.BigDecimal => f.dataType match {
-      case dt: org.apache.spark.sql.types.DecimalType =>
-        b.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
-      case _ => b
-    }
-    case other => other
-  }
 
   /** add.path is percent-encoded in the log (spaces etc.). Percent-decode
     * ONLY — form decoding (URLDecoder) would corrupt literal '+' to a

@@ -1507,7 +1507,7 @@ object DeltaWriter {
     if (cdfEnabled(snap.configuration)) {
       import org.apache.spark.sql.functions.{col, lit}
       def q(n: String) = col(s"`${n.replace("`", "``")}`")
-      val cdc = subtractPriorDv(spark, base, candidates, matchedDf)
+      val cdc = DeltaScan.subtractDeleted(spark, base, candidates, matchedDf)
         .select(snap.schema.fieldNames.toSeq.map(q): _*)
         .withColumn("_change_type", lit("delete"))
       lines ++= writeCdcFiles(spark, path, snap, cdc)
@@ -1667,7 +1667,7 @@ object DeltaWriter {
       if (dvLines.isEmpty) return 0L
       val lines = mutable.ArrayBuffer(dvLines: _*)
       if (cdfEnabled(snap.configuration)) {
-        val cdc = subtractPriorDv(spark, base, candidates, matchedDf)
+        val cdc = DeltaScan.subtractDeleted(spark, base, candidates, matchedDf)
           .select(schema.fieldNames.toSeq.map(q): _*)
           .withColumn("_change_type", lit("delete"))
         lines ++= writeCdcFiles(spark, path, snap, cdc)
@@ -1868,7 +1868,7 @@ object DeltaWriter {
           val cdc = scannedOpt match {
             case None => upserts.withColumn("_change_type", lit("insert"))
             case Some(sc) =>
-              val live = subtractPriorDv(spark, base, candidates, sc)
+              val live = DeltaScan.subtractDeleted(spark, base, candidates, sc)
               val liveKeys = live.select(keys.map(q): _*).distinct()
               val pre = live
                 .join(src.select(keys.map(q) :+ col("__graft_delete"): _*),
@@ -1969,7 +1969,7 @@ object DeltaWriter {
       .where(Cond.compile(conditions, Some(schema)))
     // scanWithRowIndex yields all PHYSICAL rows (delete needs that to
     // merge bitmaps); subtract prior-DV rows before building images
-    val matched = subtractPriorDv(spark, base, candidates, matchedRaw)
+    val matched = DeltaScan.subtractDeleted(spark, base, candidates, matchedRaw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -2133,10 +2133,10 @@ object DeltaWriter {
         val cols = schema.fieldNames.toSeq.map(q)
         val wholeDel =
           if (whole.isEmpty) None
-          else Some(subtractPriorDv(spark, base, whole,
+          else Some(DeltaScan.subtractDeleted(spark, base, whole,
             DeltaScan.scanWithRowIndex(snap, whole)).select(cols: _*))
         val maskDel = restScanOpt.map(m =>
-          subtractPriorDv(spark, base, rest, m).select(cols: _*))
+          DeltaScan.subtractDeleted(spark, base, rest, m).select(cols: _*))
         val dels = (wholeDel, maskDel) match {
           case (Some(a), Some(b)) => Some(a.unionByName(b))
           case (a, b) => a.orElse(b)
@@ -2593,10 +2593,10 @@ object DeltaWriter {
       matching: DataFrame): (Seq[String], Long) = {
     // prior DVs, keyed like __graft_file, captured into the task closure
     // (bytes are roaring-compressed — small)
+    val key = DeltaScan.fileUri(spark, base)
     val priorDv: Map[String, Array[Byte]] = candidates.flatMap(a =>
       a.deletionVector.map(dv =>
-        DeltaScan.fileUri(spark, base, a) ->
-          DeletionVectors.read(spark, base, dv))).toMap
+        key(a) -> DeletionVectors.read(spark, base, dv))).toMap
 
     import spark.implicits._
     val grouped = matching
@@ -2643,8 +2643,7 @@ object DeltaWriter {
       } finally grouped.unpersist()
     if (perFile.isEmpty) return (Nil, 0L)
 
-    val byUri: Map[String, AddAction] =
-      candidates.map(a => DeltaScan.fileUri(spark, base, a) -> a).toMap
+    val byUri: Map[String, AddAction] = candidates.map(a => key(a) -> a).toMap
 
     val nf = JsonNodeFactory.instance
     val lines = mutable.ArrayBuffer.empty[String]
@@ -2814,32 +2813,6 @@ object DeltaWriter {
     (listCdcFiles(fs, root) -- before).toSeq.sorted
       .foreach(rel => lines += cdcLineFor(fs, root, rel))
     lines.toSeq
-  }
-
-  /** Subtract rows a prior deletion vector already masked from a
-    * [[DeltaScan.scanWithRowIndex]] frame — those physical rows are
-    * dead and must feed neither update images nor change data.
-    */
-  private def subtractPriorDv(spark: org.apache.spark.sql.SparkSession,
-      base: String, candidates: Seq[AddAction], df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val dvCand = candidates.filter(_.hasDeletionVector)
-    if (dvCand.isEmpty) df
-    else {
-      import spark.implicits._
-      val dvRows = dvCand.map(a => DeltaScan.fileUri(spark, base, a) ->
-        DeletionVectors.read(spark, base, a.deletionVector.get))
-      val deleted = spark.createDataset(dvRows)
-        .flatMap { case (f, bytes) =>
-          DeletionVectors.deserializeData(bytes).iterator.map(i => (f, i)) }
-        .toDF("__graft_file", "__graft_row_index")
-      val totalDeleted =
-        dvCand.flatMap(_.deletionVector).map(_.cardinality).sum
-      val build =
-        if (totalDeleted <= 5000000L) broadcast(deleted) else deleted
-      df.join(build,
-        Seq("__graft_file", "__graft_row_index"), "left_anti")
-    }
   }
 
   private[delta] def rowTrackingEnabled(cfg: Map[String, String]): Boolean =
@@ -4013,10 +3986,10 @@ object DeltaWriter {
           "_row-id-col-" + java.util.UUID.randomUUID()),
         snap.configuration.getOrElse(MatRowVersionKey,
           "_row-commit-version-col-" + java.util.UUID.randomUUID())))
+    val matFields = matCols.toSeq.flatMap { case (i, v) =>
+      Seq(StructField(i, LongType), StructField(v, LongType)) }
     val physReadSchema = StructType(
-      DeltaSchema.physicalize(StructType(dataFields)).fields ++
-        matCols.toSeq.flatMap { case (i, v) =>
-          Seq(StructField(i, LongType), StructField(v, LongType)) })
+      DeltaSchema.physicalize(StructType(dataFields)).fields ++ matFields)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -4064,53 +4037,25 @@ object DeltaWriter {
     val lines = mutable.ArrayBuffer.empty[String]
     var nCompacted = 0
 
-    // per-bin preparation: key by (file, row index) once, MATERIALIZE
-    // stable row ids on row-tracked tables (coalesce keeps values
-    // already materialized by an earlier OPTIMIZE), then subtract
-    // DV-deleted rows exactly like the scan does
-    def prepareBin(scan0: DataFrame, bin: Seq[AddAction]): DataFrame = {
-      import org.apache.spark.sql.functions.{broadcast, coalesce, col}
-      val dvActions = bin.filter(_.hasDeletionVector)
-      if (dvActions.isEmpty && matCols.isEmpty) return scan0
-      def q(n: String) = col(s"`${n.replace("`", "``")}`")
-      val keyed0 = scan0
-        .withColumn("__graft_ri", scan0.col("_metadata.row_index"))
-        .withColumn("__graft_file", DeltaScan.normalizeFileKey(
-          org.apache.spark.sql.functions.input_file_name()))
-      val keyed = matCols match {
-        case None => keyed0
-        case Some((matId, matVer)) =>
-          import spark.implicits._
-          val info = bin.map(a => (DeltaScan.fileUri(spark, base, a),
-            a.baseRowId, a.defaultRowCommitVersion))
-            .toDF("__graft_file", "__graft_base", "__graft_dver")
-          keyed0.join(broadcast(info), Seq("__graft_file"))
-            .withColumn(matId,
-              coalesce(q(matId), q("__graft_base") + q("__graft_ri")))
-            .withColumn(matVer, coalesce(q(matVer), q("__graft_dver")))
-            .drop("__graft_base", "__graft_dver")
+    // per-bin read over the table's one scan constructor: exactly the
+    // physical data (+ materialized row-tracking) columns, so the rewrite
+    // carries the same data. Row-tracked tables MATERIALIZE stable row
+    // ids (coalesce keeps values an earlier OPTIMIZE already
+    // materialized); DV-deleted rows are subtracted exactly like the
+    // scan does
+    def readBin(bin: Seq[AddAction]): DataFrame = {
+      val scan = DeltaScan.fileScan(snap, bin, dataFields, matFields)
+      val phys = physReadSchema.fieldNames.toSeq.map(n =>
+        scan.col(s"`${n.replace("`", "``")}`"))
+      if (!bin.exists(_.hasDeletionVector) && matCols.isEmpty)
+        return scan.select(phys: _*)
+      val keyed = scan.select(phys ++ DeltaScan.rowKey(scan): _*)
+      val ided = matCols.fold(keyed) { case (matId, matVer) =>
+        DeltaScan.withStableIds(spark, base, bin, keyed,
+          Some(matId), Some(matVer), matId, matVer)
       }
-      val sub =
-        if (dvActions.isEmpty) keyed
-        else {
-          val dvRows: Seq[(String, Array[Byte])] = dvActions.map { a =>
-            DeltaScan.fileUri(spark, base, a) ->
-              DeletionVectors.read(spark, base, a.deletionVector.get)
-          }
-          import spark.implicits._
-          val deleted = spark.createDataset(dvRows)
-            .flatMap { case (f, data) =>
-              DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-            .toDF("__graft_file", "__graft_ri")
-          val totalCard =
-            dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-          val build =
-            if (totalCard <= 5000000L)
-              org.apache.spark.sql.functions.broadcast(deleted)
-            else deleted
-          keyed.join(build, Seq("__graft_file", "__graft_ri"), "left_anti")
-        }
-      sub.drop("__graft_file", "__graft_ri")
+      DeltaScan.subtractDeleted(spark, base, bin, ided)
+        .drop("__graft_file", "__graft_row_index")
     }
 
     // write `df` into the partition directory of `bin.head` (multi-file
@@ -4190,12 +4135,10 @@ object DeltaWriter {
         // the recluster's bread and butter)
         if (files.size >= 2 || files.exists(_.hasDeletionVector) ||
             files.exists(_.size > targetFileBytes)) {
-          val paths = files.map(a => DeltaScan.resolvePath(base, a.path))
-          val scan0 = spark.read.schema(physReadSchema).parquet(paths: _*)
           // persisted: the Morton quantization agg, the range
           // partitioner's sampling AND the write would otherwise each
           // re-read the partition (and re-run the DV anti-join)
-          val df = prepareBin(scan0, files)
+          val df = readBin(files)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val nOut = math.max(1L,
@@ -4219,10 +4162,7 @@ object DeltaWriter {
         big.filter(_.hasDeletionVector).foreach(f => bins += mutable.ArrayBuffer(f))
         bins.filter(b => b.size >= 2 || b.exists(_.hasDeletionVector))
           .foreach { bin =>
-            val scan0 = spark.read.schema(physReadSchema).parquet(
-              bin.map(a => DeltaScan.resolvePath(base, a.path)).toSeq: _*)
-            rewrite(prepareBin(scan0, bin.toSeq).coalesce(1),
-              bin.toSeq, pv)
+            rewrite(readBin(bin.toSeq).coalesce(1), bin.toSeq, pv)
           }
       }
     }

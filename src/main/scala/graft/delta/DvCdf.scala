@@ -53,9 +53,8 @@ private[graft] object DvCdf {
     val base = snap.deltaPath.stripSuffix("/")
     import org.apache.spark.sql.functions.{broadcast, col, explode}
     import spark.implicits._
-    val pairs = diffs.map { case (a, idx) =>
-      DeltaScan.fileUri(spark, base, a) -> idx
-    }.toDF("__graft_file", "__graft_ri_list")
+    val key = DeltaScan.fileUri(spark, base)
+    val pairs = diffs.map { case (a, idx) => key(a) -> idx }.toDF("__graft_file", "__graft_ri_list")
       .select(col("__graft_file"),
         explode(col("__graft_ri_list")).as("__graft_row_index"))
     DeltaScan.scanWithRowIndex(snap, diffs.map(_._1))

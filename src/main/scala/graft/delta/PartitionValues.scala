@@ -3,8 +3,6 @@ package graft.delta
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Delta partition-value (de)serialization
@@ -13,8 +11,8 @@ import org.apache.spark.sql.types._
   * Spec: `_partition_value_to_python` / `_serialize_partition_value`
   * (deltalake2db/filter_by_meta.py:13-69). Partition columns are not
   * stored in the parquet files; their string values from
-  * `add.partitionValues` are injected into each file's projection as
-  * typed literal columns. A null / absent value (the
+  * `add.partitionValues` become each file group's typed partition row
+  * in [[DeltaFileIndex]]. A null / absent value (the
   * `__HIVE_DEFAULT_PARTITION__` convention) becomes a typed NULL.
   */
 object PartitionValues {
@@ -48,15 +46,6 @@ object PartitionValues {
     case _: DecimalType => new java.math.BigDecimal(value)
     case other => throw new IllegalArgumentException(
       s"Unsupported partition type: $other")
-  }
-
-  /** Typed literal column for one partition value of one file. */
-  def toLiteral(value: Option[String], f: StructField): Column = {
-    val base = value match {
-      case None => lit(null)
-      case Some(v) => lit(deserialize(v, f.dataType))
-    }
-    base.cast(f.dataType).as(f.name)
   }
 
   /** Serialize a Scala predicate value to the partition-string form for

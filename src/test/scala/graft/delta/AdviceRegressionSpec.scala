@@ -21,13 +21,21 @@ class AdviceRegressionSpec extends SparkSuite {
     val path = tmp()
     val df = Seq((1L, "c++"), (2L, "a b"), (3L, "x+y z")).toDF("id", "lang")
     DeltaWriter.write(df, path, partitionBy = Seq("lang"))
-    // wideUnionThreshold=0 forces the broadcast-join path whose file key
-    // used form-decoding: '+' became a space and the rows vanished
-    val wide = DeltaLake.scanDelta(spark, path, ScanSettings(wideUnionThreshold = 0))
-    val union = DeltaLake.scanDelta(spark, path)
-    assert(wide.count() == 3)
-    assert(wide.collect().map(_.toString).sorted.toSeq ==
-      union.collect().map(_.toString).sorted.toSeq)
+    // a form-decoded file key turns '+' into a space: the rows vanish
+    val back = DeltaLake.scanDelta(spark, path)
+    assert(back.count() == 3)
+    assert(back.collect().map(_.toString).sorted.toSeq ==
+      Seq("[1,c++]", "[2,a b]", "[3,x+y z]"))
+    // DML keys files by the same normalized `_metadata.file_path`: a
+    // form-decoded key would fail to match the driver-built key, and the
+    // DV delete / update would miss (or reject) these partitions
+    DeltaWriter.write(Seq((4L, "c++"), (5L, "a b"), (6L, "x+y z"))
+      .toDF("id", "lang"), path, mode = "append")
+    assert(DeltaWriter.delete(spark, path, Seq(Cond("id", "in", Seq(1L, 5L)))) == 2L)
+    assert(DeltaWriter.update(spark, path, Seq(Cond("lang", "=", "x+y z")),
+      Map("id" -> (org.apache.spark.sql.functions.col("id") + 100L))) == 2L)
+    assert(DeltaLake.scanDelta(spark, path).collect().map(_.toString)
+      .sorted.toSeq == Seq("[103,x+y z]", "[106,x+y z]", "[2,a b]", "[4,c++]"))
   }
 
   test("hive-escaped partition dirs (':' '%') round-trip through add.path") {
@@ -38,14 +46,22 @@ class AdviceRegressionSpec extends SparkSuite {
     DeltaWriter.write(df, path, partitionBy = Seq("tag"))
     val back = DeltaLake.scanDelta(spark, path).orderBy("id").collect()
     assert(back.map(_.getAs[String]("tag")).toSeq == Seq("a:b", "50%off", "plain"))
-    // and through the wide path too (same decode on the executor side)
-    val wide = DeltaLake.scanDelta(spark, path, ScanSettings(wideUnionThreshold = 0))
-    assert(wide.count() == 3)
+    assert(DeltaLake.scanDelta(spark, path).count() == 3)
     // the stored add.path is percent-encoded (no raw '%3A' that would
     // percent-decode to a different on-disk name)
     val snap = DeltaLake.deltaMeta(spark, path)
     val stored = snap.liveFiles.map(_.path)
     assert(stored.exists(_.contains("%253A")), stored.mkString(", "))
+    // DV delete and update on the escaped partitions: DML's file key
+    // (from `_metadata.file_path`) must match the driver-built key
+    DeltaWriter.write(Seq((4L, "a:b"), (5L, "50%off")).toDF("id", "tag"),
+      path, mode = "append")
+    assert(DeltaWriter.delete(spark, path, Seq(Cond("id", "=", 2L))) == 1L)
+    assert(DeltaWriter.update(spark, path, Seq(Cond("tag", "=", "a:b")),
+      Map("id" -> (org.apache.spark.sql.functions.col("id") + 100L))) == 2L)
+    assert(DeltaLake.scanDelta(spark, path).orderBy("id").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("tag"))).toSeq ==
+      Seq((3L, "plain"), (5L, "50%off"), (101L, "a:b"), (104L, "a:b")))
   }
 
   test("timestamp-partitioned table scans back (ntz, hive-escaped dirs)") {

@@ -138,4 +138,56 @@ class FileIndexSpec extends SparkSuite {
     assert(rows.map(_.getAs[Long]("id")).sorted.toSeq == Seq(2L, 4L),
       s"got ${rows.mkString(", ")} — file-key normalization diverged")
   }
+
+  test("DML, row-id and CDF reads plan ONE DeltaFileIndex scan") {
+    // delete/update's predicate pass, the stable-id scan, DV change rows
+    // and stored change data all go through the one scan constructor: a
+    // single FileSourceScanExec over a DeltaFileIndex, with the DML
+    // predicate pushed into the parquet scan
+    val path = tmp()
+    val df = (1L to 100L).map(i => (i, s"p${i % 4}", s"v$i")).toDF("id", "p", "s")
+    DeltaWriter.write(df.repartition(2), path, partitionBy = Seq("p"),
+      properties = Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaWriter.delete(spark, path, Seq(Cond("id", "<=", 10L)))
+    DeltaLake.updateWhere(spark, path, Seq(Cond("id", "<=", 20L)),
+      Map("s" -> lit("u")))
+    val snap = DeltaLog.forPath(spark, path)
+
+    def oneIndexScan(what: String, d: org.apache.spark.sql.DataFrame)
+        : FileSourceScanExec = {
+      d.collect()
+      val scans = allScans(d.queryExecution.executedPlan)
+      assert(scans.size == 1, s"$what: ${scans.size} scan nodes")
+      assert(scans.head.relation.location.isInstanceOf[DeltaFileIndex],
+        s"$what: ${scans.head.relation.location.getClass.getSimpleName}")
+      scans.head
+    }
+
+    val pred = Cond.compile(Seq(Cond("id", ">", 90L)), Some(snap.schema))
+    val deleteShape = DeltaScan.scanWithRowIndex(snap, snap.liveFiles).where(pred)
+    assert(deleteShape.count() == 10)
+    val pushed = oneIndexScan("delete predicate pass", deleteShape)
+      .metadata("PushedFilters")
+    assert(pushed != "[]", s"PushedFilters: $pushed")
+    val partShape = DeltaScan.scanWithRowIndex(snap, snap.liveFiles)
+      .where(col("p") === "p1")
+    val partScan = oneIndexScan("partition predicate pass", partShape)
+    assert(partScan.metrics("numFiles").value < snap.liveFiles.size,
+      "partition pruning did not reach the index on the DML pass")
+
+    val ids = DeltaScan.scanWithStableIds(snap)
+    assert(ids.count() == 90)
+    oneIndexScan("scanWithStableIds", ids)
+
+    val dvFile = snap.liveFiles.find(_.hasDeletionVector).get
+    val rowsAt = DvCdf.rowsAt(snap, Seq(dvFile -> Seq(0L)))
+    assert(rowsAt.count() == 1)
+    oneIndexScan("DvCdf.rowsAt", rowsAt)
+
+    val cdcs = CdfEngine.cdcActions(DeltaLog.readCommitJson(spark, path, 2L).get)
+    assert(cdcs.nonEmpty)
+    val stored = CdfEngine.readStored(snap, cdcs)
+    assert(stored.count() == 20) // 10 live matches: pre + post images
+    oneIndexScan("CdfEngine.readStored", stored)
+  }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.{DeltaLake, SparkSuite}
 
-/** The wide-partition scan path (single multi-path scan + broadcast
-  * file→partition-values join) must agree exactly with the union path.
+/** Wide (many-partition) scans: one parquet scan node whatever the
+  * partition count, partition values typed by the index, column mapping
+  * and NULL partitions intact.
   */
 class WideScanSpec extends SparkSuite {
 
@@ -20,33 +21,30 @@ class WideScanSpec extends SparkSuite {
       .toDF("id", "payload", "bucket")
     DeltaWriter.write(df, path, partitionBy = Seq("bucket"))
 
-    val viaUnion = DeltaLake.scanDelta(spark, path)
-    val viaJoin = DeltaLake.scanDelta(spark, path,
-      ScanSettings(wideUnionThreshold = 0))
-    assert(viaJoin.schema.fieldNames.toSeq == viaUnion.schema.fieldNames.toSeq)
-    assert(rows(viaJoin) == rows(viaUnion))
-    assert(rows(viaJoin).size == 50)
+    val back = DeltaLake.scanDelta(spark, path)
+    assert(back.schema.fieldNames.toSeq == Seq("id", "payload", "bucket"))
+    assert(rows(back) == rows(df))
+    assert(rows(back).size == 50)
 
-    // plan shape: exactly one parquet scan node on the join path (AQE
+    // plan shape: exactly one parquet scan node over ten partitions (AQE
     // toString repeats the plan — look at the final section only)
-    val planStr = viaJoin.queryExecution.executedPlan.toString
+    val planStr = back.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert("Scan parquet".r.findAllIn(planStr).size == 1, planStr)
 
     // filters still work (on both partition and data columns)
     val filtered = DeltaLake.scanDelta(spark, path,
-      ScanSettings(wideUnionThreshold = 0,
-        conditions = Seq(Cond("bucket", "=", "3"), Cond("id", "<=", 23))))
+      ScanSettings(conditions = Seq(Cond("bucket", "=", "3"), Cond("id", "<=", 23))))
     assert(filtered.collect().map(_.getAs[Long]("id")).sorted.toSeq == Seq(3L, 13L, 23L))
   }
 
   test("wide path handles column mapping + null partitions (faker2)") {
-    val viaUnion = DeltaLake.scanDelta(spark, fixture("faker2"))
-    val viaJoin = DeltaLake.scanDelta(spark, fixture("faker2"),
-      ScanSettings(wideUnionThreshold = 0))
-    assert(rows(viaJoin) == rows(viaUnion))
+    val back = DeltaLake.scanDelta(spark, fixture("faker2"))
+    assert(back.count() ==
+      DeltaLake.deltaMeta(spark, fixture("faker2")).liveFiles
+        .flatMap(_.liveRecords).sum)
     // the null-partition row survives with a NULL partition value
-    val nullPart = viaJoin.where(col("`Company Very Short`").isNull)
+    val nullPart = back.where(col("`Company Very Short`").isNull)
     assert(nullPart.count() == 1)
   }
 }
